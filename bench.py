@@ -8,9 +8,10 @@ Measures
   write) — docs/sec.
 
 The headline "metric" is pipeline docs/sec (the north-star unit).  The
-scaling-efficiency evidence (same pipeline at local[8] vs local[32]) is
-produced by ``python bench.py --scaling``, which runs both legs in
-subprocesses and writes BENCH/BASELINE.md.
+scaling-efficiency evidence (same pipeline at local[N] vs local[4N], with
+4N = nproc; see tools/hw_ceiling.py::legs) is produced by
+``python bench.py --scaling``, which runs both legs in subprocesses and
+writes BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -133,7 +134,7 @@ def run_pipeline_leg(cpus: int, n_docs: int) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
     import __spark_entry__ as entry_mod
@@ -189,30 +190,36 @@ SCALING_DOCS = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "1000000"))
 
 
 def scaling() -> None:
-    """Run the pipeline at 8 and 32 cores as INTERLEAVED subprocess pairs
-    and write BENCH/BASELINE.md.
+    """Run the pipeline at N and 4N = nproc cores as INTERLEAVED subprocess
+    pairs and write BENCH/BASELINE.md.
 
     Methodology, forced by this sandbox VM's measurement noise (identical
     runs drift 1-3× over minutes — cold-page storms, neighbor steal):
 
-    * legs alternate 8→32→8→32… so slow VM windows hit both legs equally;
+    * legs alternate N→4N→N→4N… so slow VM windows hit both legs equally;
       each pair yields one efficiency sample taken from adjacent runs;
     * each leg is a fresh subprocess, taskset-pinned to exactly its core
       budget — in local mode python UDF workers are separate OS processes,
-      so an unpinned local[8] leg would borrow the machine's 24 idle cores
+      so an unpinned local[N] leg would borrow the machine's idle cores
       for UDF work and overstate small-leg throughput;
     * one unmeasured warm-up run per subprocess pays JVM codegen, python
       worker spawn and first-touch page faults; the measured run is
       steady-state;
     * reported efficiency uses the best run per leg (the run least
       disturbed by the VM), with all pairwise samples shown."""
+    from tools.hw_ceiling import legs
+    from tools.hw_ceiling import measure as hw_measure
+
     pairs = int(os.environ.get("SPARK_GRAFT_SCALING_PAIRS", "3"))
-    runs: dict[int, list[dict]] = {8: [], 32: []}
+    small, large = legs()
+    allowed = sorted(os.sched_getaffinity(0))
+    runs: dict[int, list[dict]] = {small: [], large: []}
     for p in range(pairs):
-        for cpus in (8, 32):
+        for cpus in (small, large):
             env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
                        SPARK_GRAFT_BENCH_RUNS="3")
-            cmd = ["taskset", "-c", f"0-{cpus - 1}", sys.executable, __file__,
+            pin = ",".join(map(str, allowed[:cpus]))
+            cmd = ["taskset", "-c", pin, sys.executable, __file__,
                    "--pipeline-leg", str(cpus), str(SCALING_DOCS)]
             out = subprocess.run(cmd, capture_output=True, text=True,
                                  env=env, cwd=REPO)
@@ -220,47 +227,46 @@ def scaling() -> None:
             runs[cpus].append(json.loads(line))
             print(f"pair {p} local[{cpus}]: {runs[cpus][-1]['seconds']}s "
                   f"(all {runs[cpus][-1]['all_runs_sec']})", file=sys.stderr)
-    best = {c: min(r["seconds"] for r in runs[c]) for c in (8, 32)}
-    tput = {c: round(SCALING_DOCS / best[c], 1) for c in (8, 32)}
-    eff = tput[32] / (4 * tput[8])
+    ratio = large / small
+    best = {c: min(r["seconds"] for r in runs[c]) for c in (small, large)}
+    tput = {c: round(SCALING_DOCS / best[c], 1) for c in (small, large)}
+    eff = tput[large] / (ratio * tput[small])
     pair_effs = [
-        round((a["seconds"] / b["seconds"]) / 4, 3)
-        for a, b in zip(runs[8], runs[32])
+        round((a["seconds"] / b["seconds"]) / ratio, 3)
+        for a, b in zip(runs[small], runs[large])
     ]
-    # hardware ceiling: the same per-doc kernel, embarrassingly parallel,
-    # no Spark — the max efficiency this shared box physically allows
-    from tools.hw_ceiling import measure as hw_measure
-
+    # hardware ceiling: the same per-doc kernel at the same K, embarrassingly
+    # parallel, no Spark — the max efficiency this shared box physically allows
     hw = hw_measure(_pages_parquet(SCALING_DOCS), seconds=8.0)
     rel = eff / hw["ceiling"] if hw["ceiling"] else float("nan")
     md = f"""# BENCH — web-text pipeline scaling evidence
 
 Same job (generate-cached {SCALING_DOCS} docs → langid → perplexity →
 heuristics → scrub → keep/drop → bucketed checkpointed write), identical
-input and configuration.  Legs alternate 8→32→8→32… in fresh taskset-pinned
+input and configuration.  Legs alternate {small}→{large}→{small}→{large}… in fresh taskset-pinned
 subprocesses (warm-up run + allocator-arena warming per subprocess, syncs
 between runs), best-of-3 measured runs per leg per pair; see
 bench.py::scaling and tools/hw_ceiling.py for the methodology.
 
-| pair | local[8] best (s) | local[32] best (s) | pairwise efficiency |
+| pair | local[{small}] best (s) | local[{large}] best (s) | pairwise efficiency |
 |---|---|---|---|
 """ + "\n".join(
         f"| {i} | {a['seconds']} | {b['seconds']} | {e} |"
-        for i, (a, b, e) in enumerate(zip(runs[8], runs[32], pair_effs))
+        for i, (a, b, e) in enumerate(zip(runs[small], runs[large], pair_effs))
     ) + f"""
 
 | leg | best wall-clock (s) | docs/sec |
 |---|---|---|
-| local[8]  | {best[8]} | {tput[8]} |
-| local[32] | {best[32]} | {tput[32]} |
+| local[{small}] | {best[small]} | {tput[small]} |
+| local[{large}] | {best[large]} | {tput[large]} |
 
-**Raw scaling efficiency (N→4N cores)** = docs/sec@32 / (4 × docs/sec@8)
+**Raw scaling efficiency ({small}→{large} cores)** = docs/sec@{large} / ({ratio:g} × docs/sec@{small})
 = **{eff:.3f}**; pairwise samples {pair_effs}.
 
 **Hardware ceiling of this box** (same per-document kernel, K independent
 single-core-pinned processes, zero coordination/IO — the embarrassingly-
-parallel upper bound): {hw["agg_8"]:.0f} docs/s at K=8 →
-{hw["agg_32"]:.0f} docs/s at K=32 = ceiling **{hw["ceiling"]:.3f}**.
+parallel upper bound): {hw["agg"][str(small)]:.0f} docs/s at K={small} →
+{hw["agg"][str(large)]:.0f} docs/s at K={large} = ceiling **{hw["ceiling"]:.3f}**.
 This sandbox shares one memory bus and one disk across both "cluster
 sizes"; a real N→4N-executor scale-up multiplies memory bandwidth and
 disks by 4×, so the ceiling there is ~1.0.

@@ -91,12 +91,6 @@ def contains_pattern(c: Column, pattern: str) -> Column:
     return F.coalesce(c.rlike(pattern), F.lit(False))
 
 
-def pii_hit_count(c: Column, pattern: str) -> Column:
-    """Aggregate: rows of ``c`` containing the pattern (pii hits per column,
-    pii_scanner_pack/main.py:41-44: one hit per row per pattern)."""
-    return F.sum(contains_pattern(c, pattern).cast("long"))
-
-
 def any_pii(c: Column, patterns: list[str] | None = None) -> Column:
     """Row predicate: any of the PII patterns occurs in the value."""
     pats = patterns if patterns is not None else [p for _, p in PII_PATTERNS]

@@ -71,8 +71,6 @@ def stopword_ratio(c: Column) -> Column:
     """Fraction of lowercase tokens found in STOPWORDS (0 if no tokens)."""
     w = words(F.lower(c))
     n = F.size(w)
-    hits = F.size(F.array_intersect(w, F.array(*[F.lit(s) for s in STOPWORDS])))
-    # array_intersect dedups; count actual token hits instead:
     hits = F.size(F.filter(w, lambda x: x.isin(STOPWORDS)))
     return F.when(n == 0, F.lit(0.0)).otherwise(hits / n)
 

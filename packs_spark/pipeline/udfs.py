@@ -9,10 +9,13 @@ Spark layer.
 
 from __future__ import annotations
 
+import re as _re
+
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
 
 def _materialize(broadcast):
     """Per-worker lazy init: PySpark Broadcast.value already deserializes
@@ -22,87 +25,6 @@ def _materialize(broadcast):
     batches — do not reintroduce one.)"""
     return broadcast.value
 
-
-def make_langid_udf(spark: SparkSession, model=None):
-    """Returns a pandas UDF: text -> struct<lang: string, margin: double>."""
-    from packs_spark.ml.ngram import LangIdModel
-
-    model = model or LangIdModel.train()
-    bc = spark.sparkContext.broadcast(model)
-    schema = T.StructType(
-        [
-            T.StructField("lang", T.StringType()),
-            T.StructField("margin", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def langid_udf(texts: pd.Series) -> pd.DataFrame:
-        m = _materialize(bc)
-        idx, margin = m.predict(texts.tolist())
-        labels = [m.langs[i] if i >= 0 else "unknown" for i in idx]
-        return pd.DataFrame({"lang": labels, "margin": margin})
-
-    return langid_udf
-
-
-def make_perplexity_udf(spark: SparkSession, model=None):
-    from packs_spark.ml.ngram import PerplexityModel
-
-    model = model or PerplexityModel.train()
-    bc = spark.sparkContext.broadcast(model)
-
-    @F.pandas_udf(T.DoubleType())
-    def ppl_udf(texts: pd.Series) -> pd.Series:
-        m = _materialize(bc)
-        return pd.Series(m.perplexity(texts.tolist()))
-
-    return ppl_udf
-
-
-def make_scrub_udf():
-    """text -> struct<scrubbed: string, spans: array<struct>, n_hits: int>.
-
-    The compiled patterns are module-level + lru_cached — each Python worker
-    compiles once (no broadcast needed: patterns are code, not data).
-    """
-    schema = T.StructType(
-        [
-            T.StructField("scrubbed", T.StringType()),
-            T.StructField(
-                "spans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("kind", T.StringType()),
-                            T.StructField("start", T.IntegerType()),
-                            T.StructField("end", T.IntegerType()),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField("n_hits", T.IntegerType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def scrub_udf(texts: pd.Series) -> pd.DataFrame:
-        from packs_spark.pipeline.scrub import scrub_series, scrub_spans
-
-        scrubbed = scrub_series(texts)
-        spans = [scrub_spans(t) for t in texts]
-        return pd.DataFrame(
-            {
-                "scrubbed": scrubbed,
-                "spans": spans,
-                "n_hits": [len(s) for s in spans],
-            }
-        )
-
-    return scrub_udf
-
-
-import re as _re
 
 _SYM_RE = _re.compile(r"[^A-Za-z0-9\s]")
 

@@ -182,11 +182,11 @@ def run_batch(
             ),
             F.sum("media_bytes").alias("total_media_bytes"),
         ]
-    metrics = written.groupBy("bucket").agg(*agg_cols)
+    # grouped by the row-level run_id too: a bucket committed by an earlier
+    # run and skipped by this one keeps that run's lineage
+    metrics = written.groupBy("bucket", "run_id").agg(*agg_cols)
     t0 = _time.time()
-    metrics.withColumn("run_id", F.lit(run_id)).write.mode("overwrite").parquet(
-        f"{output_path}_metrics"
-    )
+    metrics.write.mode("overwrite").parquet(f"{output_path}_metrics")
     stats["metrics_s"] = round(_time.time() - t0, 2)
     if "media_format" in written.columns:
         # corpus-level format counts (a handful of rows: one per container

@@ -18,6 +18,7 @@ Scale notes (100 TB / 1000-executor design point):
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -33,6 +34,45 @@ _MALLOC_ENV = {
     "MALLOC_MMAP_THRESHOLD_": str(1 << 30),
     "MALLOC_TRIM_THRESHOLD_": str(1 << 30),
 }
+
+
+# Per-task CPU of every Python UDF worker.  PySpark's worker calls
+# importlib.invalidate_caches() at the start of each task
+# (pyspark.worker_util.setup_spark_files).  Before CPython 3.13 that makes
+# every zipimporter on sys.path re-parse its archive's central directory
+# right away: pyspark.zip (one importer per imported subpackage), the py4j
+# zip and the spark-core jar, 16 importers in all.  That re-read was ~85%
+# of a reused worker's CPU: about 0.18 CPU s per task on a 4-vCPU Xeon VM
+# under CPython 3.11, more than the UDF's own kernels.  The memo below keys
+# each archive's parsed directory by (inode, size, mtime_ns), so an
+# unchanged archive is parsed once per process and a rewritten one is
+# still re-read: imports behave as before.  Every engine UDF's pickle
+# imports packs_spark in the worker, which installs the memo there, under
+# spark-submit --py-files too.
+# Rejected: a custom spark.python.daemon.module (it cannot launch under
+# --py-files, which reach sys.path only per task), and importing pyspark
+# from site-packages instead of the zips (it ties the workers to a second,
+# possibly different, pyspark copy).  CPython 3.13+ reads lazily already.
+if sys.version_info < (3, 13):
+    import zipimport
+
+    _read_zip_directory_uncached = zipimport._read_directory
+    _zip_directories: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+    def _read_zip_directory(archive):
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return _read_zip_directory_uncached(archive)  # raises ZipImportError
+        key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        hit = _zip_directories.get(archive)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        files = _read_zip_directory_uncached(archive)
+        _zip_directories[archive] = (key, files)
+        return files
+
+    zipimport._read_directory = _read_zip_directory
 
 
 def get_spark(

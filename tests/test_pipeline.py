@@ -94,6 +94,11 @@ def test_pipeline_resume_skips_completed(spark, pages_pd, pipeline_out):
     assert stats3["written"] == 1
     got = spark.read.parquet(out)
     assert got.count() == N_DOCS  # idempotent overwrite
+    # metrics lineage: only the re-written bucket carries the resume's run_id
+    m = spark.read.parquet(f"{out}_metrics").toPandas().set_index("bucket")
+    assert len(m) == 16
+    assert m.run_id[5] == "test-run-3"
+    assert (m.run_id.drop(5) == "test-run").all()
 
 
 def test_metrics_side_output(spark, pipeline_out):
